@@ -19,13 +19,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     from joern_spark.analytics import ann, dedup, relational, text
     from joern_spark.pipeline import run_pipeline
-    from joern_spark.session import get_spark
+    from joern_spark.session import get_spark, host_cpus
     from joern_spark.synth import synth_docs
+
+    cpus = host_cpus()
 
     spark = get_spark(app_name="bench", cpus=cpus, shuffle_partitions=cpus,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})

@@ -4,13 +4,14 @@ triple factory with the query/data-processing capabilities of TheGreatAutomata/j
 The reference (read-only at /root/reference) is a Scala/OverflowDB property-graph
 engine; this package re-expresses what it *computes* as idiomatic Spark:
 
-- per-document parse/AST construction = vectorized ``mapInPandas`` over an
+- per-document parse/AST construction = vectorized ``mapInArrow`` over an
   interleaved-span document table (reference: per-file ConcurrentWriterCpgPass,
   ``x2cpg/.../passes/AstCreationPass.scala``),
 - linking passes = DataFrame joins (broadcast for dimension-sized symbol tables,
   salted/AQE for hot keys; reference: ``x2cpg/.../utils/LinkingUtil.scala``),
-- per-method CFG / reaching-definitions = ``applyInPandas`` group kernels
-  (reference: ``CfgCreator.scala``, ``ReachingDefProblem.scala``),
+- per-method CFG / dominators / reaching-definitions / type recovery = one
+  shuffle-free per-document ``mapInArrow`` kernel (reference:
+  ``CfgCreator.scala``, ``ReachingDefProblem.scala``),
 - materialization = partitioned parquet tables (``nodes``/``edges``/``triples``)
   with per-partition lineage rows and resumable stage manifests.
 """

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.dims import MAX_BROADCAST_DIM
+
 MAX_CALL_DEPTH = 4  # Engine.scala:322
 MAX_ROUNDS = 128
 
@@ -158,12 +160,6 @@ def reachable_by(nodes: DataFrame, edges: DataFrame,
     return out
 
 
-# row budget for collecting the backward relations driver-side; matches the
-# 2M-row dictionary budget of operators/dims.py (reference: the default
-# in-memory path cache of Engine.scala — shareCacheBetweenTasks)
-FLOW_COLLECT_BUDGET = 2_000_000
-
-
 def _driver_bfs_pairs(intra: dict, inter: dict, sink_ids: set, source_ids: set,
                       max_call_depth: int) -> set:
     """Per-sink backward BFS replicating reachable_by's distributed round
@@ -222,7 +218,7 @@ class FlowEngine:
     """
 
     def __init__(self, nodes: DataFrame, edges: DataFrame,
-                 budget: int = FLOW_COLLECT_BUDGET):
+                 budget: int = MAX_BROADCAST_DIM):
         self.nodes, self.edges = nodes, edges
         self.budget = budget
         self._rd_back: DataFrame | None = None

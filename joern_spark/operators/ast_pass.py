@@ -1,5 +1,5 @@
 """AST creation pass: docs → unified CPG row stream (nodes + edges + span
-provenance) via one vectorized ``mapInPandas`` over document partitions.
+provenance) via one vectorized ``mapInArrow`` over document partitions.
 
 Reference: ``c2cpg/.../passes/AstCreationPass.scala:20-76`` — parts are files,
 parsed in worker threads, absorbed per-part. Here parts are document-table

@@ -33,10 +33,6 @@ MAX_HIERARCHY_DEPTH = 20  # bound for the inheritance closure loop
 # independent magic constant (INHERITS_FROM edge rows are wider than dim rows,
 # hence the divisor); above it the distributed iterative closure takes over
 SMALL_HIERARCHY_LIMIT = MAX_BROADCAST_DIM // 20
-# method-dimension budget for the static-link broadcast join; above it the
-# broadcast would blow the driver/executor memory at cluster scale, so the
-# linker auto-falls-back to the salted shuffle join
-MAX_BROADCAST_METHODS = MAX_BROADCAST_DIM
 
 
 def _method_dim(nodes: DataFrame) -> DataFrame:
@@ -54,7 +50,7 @@ def _method_dim(nodes: DataFrame) -> DataFrame:
 
 def static_call_linker(nodes: DataFrame, strategy: str = "auto",
                        hot_keys: DataFrame | None = None,
-                       broadcast_budget: int = MAX_BROADCAST_METHODS) -> DataFrame:
+                       broadcast_budget: int = MAX_BROADCAST_DIM) -> DataFrame:
     """CALL edges for STATIC_DISPATCH / INLINED calls.
 
     strategy='broadcast' (dim fits → map-side join, no shuffle of the skewed
@@ -101,7 +97,7 @@ def _sig_conjunct():
 
 def _static_candidates(nodes: DataFrame, strategy: str = "auto",
                        hot_keys: DataFrame | None = None,
-                       broadcast_budget: int = MAX_BROADCAST_METHODS) -> DataFrame:
+                       broadcast_budget: int = MAX_BROADCAST_DIM) -> DataFrame:
     """Static-link candidate rows (src, dst, doc_id, method_id, m_external)."""
     calls = _static_calls(nodes)
     methods = _method_dim(nodes)

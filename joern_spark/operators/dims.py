@@ -10,11 +10,11 @@ otherwise return the frame unhinted so Catalyst plans a shuffle join — with
 AQE skew handling enabled in the session conf, the job degrades instead of
 dying.
 
-The pipeline computes the corpus vocabulary size ONCE per run (a side product
-of the recovery-dictionary job) and installs it with :func:`dim_fits_hint`,
-so the hot path pays zero extra probe jobs; standalone calls (tests, DSL,
-the over-budget DataFrame fallback) probe per-site with an early-stopping
-``limit(budget+1).count()``.
+The pipeline computes the corpus vocabulary size ONCE per run (from the kind
+counts of the recovery-facts job), decides it with :func:`fits_budget` and
+installs the answer with :func:`dim_fits_hint`, so the hot path pays zero
+extra probe jobs; standalone calls (tests, DSL, flow queries) probe per-site
+with an early-stopping ``limit(budget+1).count()``.
 """
 
 from __future__ import annotations
@@ -24,8 +24,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# matches the reference-derived 2M-row dictionary budget used by the fused
-# kernel (method_kernels.MAX_BROADCAST_NAMES, type_recovery.RECOVERY_DICT_BUDGET)
+# the one row budget for anything broadcast or collected to the driver:
+# dimension joins, the call graph's method dim, FlowEngine's driver-side BFS
 MAX_BROADCAST_DIM = 2_000_000
 
 _FITS_HINT: bool | None = None
@@ -43,6 +43,13 @@ def dim_fits_hint(fits: bool):
         yield
     finally:
         _FITS_HINT = prev
+
+
+def fits_budget(rows: int) -> bool:
+    """The run-wide verdict for a vocabulary of ``rows`` rows. An enclosing
+    ``dim_fits_hint(False)`` forces the over-budget (shuffle-join) plans, so
+    a caller can exercise them on a small corpus."""
+    return rows <= MAX_BROADCAST_DIM and _FITS_HINT is not False
 
 
 # probe memo: semantically-equal dims recur (the method dim is rebuilt by

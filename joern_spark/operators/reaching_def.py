@@ -19,24 +19,16 @@ Faithful re-expression of the reference dataflow stack (SURVEY.md §2.A #25-26):
 Closure/capture edges (``addEdgesToCapturedIdentifiersAndParameters``) are out
 of scope for the fixture languages (no lambdas emitted by the frontends yet).
 
-Spark side: ``cogroup(nodes, cfg_edges).applyInPandas`` — one group per
-method (reference: ForkJoinParallelCpgPass over methods,
+Spark side: runs per method inside the fused per-document kernel
+(``method_kernels.py``; reference: ForkJoinParallelCpgPass over methods,
 ``ReachingDefPass.scala:14-53``), bail-out above 4000 definitions preserved.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .dims import budgeted_broadcast
-
 from ..ids import stub_id
-from ..schema import EDGES_SCHEMA_DDL
 from .semantics import default_semantics, semantics_for
 
 MAX_NUMBER_OF_DEFINITIONS = 4000  # ReachingDefPass.scala:14
@@ -180,12 +172,14 @@ class MethodModel:
                        or (isinstance(m, tuple) and len(m) == 2 and m[1] == -1)
                        for m in s)
 
-    def is_output_arg_of_internal_method(self, r: dict) -> bool:
+    def unmodeled_call_of(self, r: dict) -> dict | None:
+        """The call ``r`` is an argument of, when no semantics model it —
+        the case EdgeValidator's output-argument rule tests."""
         call = self.in_call(r["node_id"])
-        if call is None:
-            return False
-        s = semantics_for(self.sem, call.get("full_name"), call.get("name"))
-        return bool(call.get("callee_internal")) and s is None
+        if call is None or semantics_for(
+                self.sem, call.get("full_name"), call.get("name")) is not None:
+            return None
+        return call
 
 
 def _build_flow_graph(m: MethodModel):
@@ -382,8 +376,15 @@ def _solve(fg, gen: dict, kill: dict) -> dict[int, int]:
 def reaching_def_edges_for_method(
     rows: list[dict[str, Any]], cfg_edges: list[tuple[int, int]],
     semantics: dict | None = None,
-) -> list[tuple[int, int, str]]:
-    """Pure kernel: one method's rows + CFG → REACHING_DEF (src, dst, variable)."""
+) -> list[tuple[int, int, str, str | None]]:
+    """Pure kernel: one method's rows + CFG → REACHING_DEF
+    (src, dst, variable, veto_callee).
+
+    ``veto_callee`` is None for an unconditional edge. Otherwise it is the
+    full_name of the call both ends are arguments of: EdgeValidator drops
+    the edge when that callee is an internal METHOD without semantics
+    (``isOutputArgOfInternalMethod``). Whether a full_name belongs to an
+    internal METHOD is a corpus-wide fact, so the caller decides it."""
     sem = semantics if semantics is not None else default_semantics()
     m = MethodModel(rows, cfg_edges, sem)
     fg = _build_flow_graph(m)
@@ -395,7 +396,7 @@ def reaching_def_edges_for_method(
         return []  # bail-out (ReachingDefPass.scala:40-52); lineage row upstream
     in_ = _solve(fg, gen, kill)
     num, rev = fg["node_num"], {v: k for k, v in fg["node_num"].items()}
-    edges: list[tuple[int, int, str]] = []
+    edges: list[tuple[int, int, str, str | None]] = []
     seen: set[tuple[int, int, str]] = set()
 
     method_id = fg["entry"]
@@ -446,8 +447,6 @@ def reaching_def_edges_for_method(
     def valid_edge_to_expression(par: dict, cur: dict) -> bool:
         if is_expression(par):
             same = _same_call_site(par, cur)
-            if same and m.is_output_arg_of_internal_method(par):
-                return False
             return (same and m.is_used(par) and m.is_defined(cur)) or \
                    (not same and m.is_used(cur))
         return m.is_used(cur)
@@ -462,7 +461,14 @@ def reaching_def_edges_for_method(
         key = (src["node_id"], dst["node_id"], variable)
         if key not in seen:
             seen.add(key)
-            edges.append(key)
+            edges.append(key + (veto_callee(dst, src),))
+
+    def veto_callee(child: dict, parent: dict) -> str | None:
+        if not (is_expression(child) and is_expression(parent)
+                and _same_call_site(parent, child)):
+            return None
+        call = m.unmodeled_call_of(parent)
+        return call.get("full_name") if call is not None else None
 
     # --- UsageAnalyzer ------------------------------------------------------
     def uses(r: dict) -> list[dict]:
@@ -585,7 +591,7 @@ def reaching_def_edges_for_method(
             edges_key = (r["node_id"], exit_id, "<RET>")
             if edges_key not in seen:
                 seen.add(edges_key)
-                edges.append(edges_key)
+                edges.append(edges_key + (None,))
         elif r["kind"] == "METHOD_PARAMETER_OUT":
             # paramIn → paramOut always (copy semantics)
             i = fg["param_outs"].index(r["node_id"])
@@ -606,52 +612,3 @@ def reaching_def_edges_for_method(
 
     return edges
 
-
-def reaching_def_pass(nodes: DataFrame, all_edges: DataFrame) -> DataFrame:
-    """REACHING_DEF edges via cogrouped per-method kernels.
-
-    ``nodes`` must already contain stub methods; call nodes are enriched with
-    ``callee_internal`` through a broadcast join against the METHOD dimension
-    (needed by the EdgeValidator output-arg rule).
-    """
-    internal_methods = (
-        nodes.filter((F.col("kind") == "METHOD") & (~F.col("is_external")))
-        .select(F.col("full_name").alias("mi_full")).distinct()
-        .withColumn("callee_internal", F.lit(True))
-    )
-    # global stubs have no body — the reference's ReachingDefPass (and the
-    # fused kernel) never runs over them. They MUST be excluded here rather
-    # than left to fail structurally: a stub group's METHOD row has a null
-    # parent_id, which flips the whole group's parent_id column to float64
-    # in the applyInPandas conversion and silently rounds 63-bit ids — ids
-    # that happen to survive the round-trip (divisible by the float spacing)
-    # would then emit param→RET edges nondeterministically per id scheme.
-    # parent_id is additionally null-coalesced so no group can ever take the
-    # float64 path (CLAUDE.md id-corruption trap, input direction).
-    body_nodes = nodes.filter(F.col("doc_id") != "<global>").withColumn(
-        "parent_id", F.coalesce(F.col("parent_id"), F.lit(-1)))
-    enriched = body_nodes.join(
-        budgeted_broadcast(internal_methods),
-        (body_nodes["kind"] == "CALL") & (body_nodes["full_name"] == internal_methods["mi_full"]),
-        "left",
-    ).drop("mi_full")
-
-    cfg = all_edges.filter(F.col("kind") == "CFG").select("src", "dst", "method_id")
-
-    def kernel(key, node_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = node_pdf.to_dict("records")
-        cfg_edges = list(zip(edge_pdf["src"], edge_pdf["dst"]))
-        out = reaching_def_edges_for_method(rows, cfg_edges)
-        doc_id = rows[0]["doc_id"] if rows else None
-        return pd.DataFrame(
-            [{"src": s, "dst": d, "kind": "REACHING_DEF", "variable": v,
-              "doc_id": doc_id, "method_id": key[0]} for s, d, v in out],
-            columns=["src", "dst", "kind", "variable", "doc_id", "method_id"],
-        )
-
-    return (
-        enriched.filter(F.col("method_id").isNotNull())
-        .groupby("method_id")
-        .cogroup(cfg.groupby("method_id"))
-        .applyInPandas(kernel, schema=EDGES_SCHEMA_DDL)
-    )

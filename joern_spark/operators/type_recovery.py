@@ -19,6 +19,8 @@ if nodes are bucketed by doc; the member dimension broadcasts.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,7 +45,9 @@ def _declared(nodes: DataFrame) -> DataFrame:
 
 
 def _members_dim(nodes: DataFrame) -> DataFrame:
-    """(class full_name, member name, member declared type)."""
+    """(recv_type = class full_name, f_name = member name, member_type =
+    member declared type). A plain join: callers broadcast the result, and
+    Catalyst sizes the inner join."""
     classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         F.col("node_id").alias("c_id"), F.col("full_name").alias("mc_full")
     )
@@ -52,9 +56,25 @@ def _members_dim(nodes: DataFrame) -> DataFrame:
             (F.col("kind") == "MEMBER")
             & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
         )
-        .join(budgeted_broadcast(classes), F.col("parent_id") == F.col("c_id"))
+        .join(classes, F.col("parent_id") == F.col("c_id"))
         .select(F.col("mc_full").alias("recv_type"), F.col("name").alias("f_name"),
                 F.col("type_full_name").alias("member_type"))
+    )
+
+
+def _method_returns(nodes: DataFrame) -> DataFrame:
+    """(callee_full = METHOD full_name, ret_type = its typed, non-ANY
+    METHOD_RETURN type)."""
+    methods = nodes.filter(F.col("kind") == "METHOD").select(
+        F.col("node_id").alias("mm_id"), F.col("full_name").alias("mm_full")
+    )
+    rets = nodes.filter(
+        (F.col("kind") == "METHOD_RETURN")
+        & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
+        & (F.col("type_full_name") != "ANY")
+    ).select(F.col("method_id").alias("mm_id"), F.col("type_full_name").alias("ret_type"))
+    return methods.join(rets, "mm_id").select(
+        F.col("mm_full").alias("callee_full"), "ret_type"
     )
 
 
@@ -137,17 +157,6 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
         .select("a_id", F.col("tfn").alias("rhs_type"))
     )
     # internal-call-return RHS: `x = g()` takes g's METHOD_RETURN type
-    methods = nodes.filter(F.col("kind") == "METHOD").select(
-        F.col("node_id").alias("mm_id"), F.col("full_name").alias("mm_full")
-    )
-    rets = nodes.filter(
-        (F.col("kind") == "METHOD_RETURN")
-        & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        & (F.col("type_full_name") != "ANY")
-    ).select(F.col("method_id").alias("mm_id"), F.col("type_full_name").alias("ret_type"))
-    method_ret = methods.join(rets, "mm_id").select(
-        F.col("mm_full").alias("callee_full"), "ret_type"
-    )
     call_ret_rhs = (
         assigns.join(kids, (F.col("a_id") == kids["parent_id"])
                      & (kids["argument_index"] == 2)
@@ -159,7 +168,7 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
                          F.col("full_name").alias("callee_full")),
             "rhs_call",
         )
-        .join(budgeted_broadcast(method_ret), "callee_full")
+        .join(budgeted_broadcast(_method_returns(nodes)), "callee_full")
         .select("a_id", F.col("ret_type").alias("rhs_type"))
     )
     alloc_rhs = alloc_rhs.unionByName(call_ret_rhs)
@@ -224,115 +233,36 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
 # Rationale (round-3 scaling work): the DataFrame implementation above is a
 # ~30-stage join DAG re-scanning the cached parse output ~12 times; profiled
 # at 14 s (8 cores) -> 33 s (32 cores) — the pipeline's worst anti-scaling
-# stage. Every join keys on ids within one method except three
-# vocabulary-sized dimensions (method return types, members, class names),
-# which ship as broadcast dicts — the same pattern as the fused kernel's
-# internal-name dictionary. The DF implementation stays as the over-budget
-# fallback and the parity oracle (tests/test_fused_recovery.py asserts exact
+# stage. Every join keys on ids within one document except two lookups into
+# vocabulary-sized dimensions (method return types, members). The fused
+# kernel runs the rules that need only the document and emits keys for the
+# two lookups, which joins after the kernel resolve. The DataFrame version
+# stays as the parity oracle (tests/test_fused_recovery.py asserts exact
 # event-set equality between the two).
 # ---------------------------------------------------------------------------
 
-RECOVERY_DICT_BUDGET = 2_000_000  # rows across all dictionaries
+
+class RecoveryFacts(NamedTuple):
+    """Corpus-wide facts the fused kernel's output is resolved against."""
+
+    internal_methods: DataFrame  # (full_name) of every internal METHOD
+    method_returns: DataFrame    # see _method_returns
+    members: DataFrame           # see _members_dim
+    kind_counts: dict[str, int]  # exact node count per kind
 
 
-def collect_recovery_dicts(nodes: DataFrame, budget: int = RECOVERY_DICT_BUDGET,
-                           with_counts: bool = False):
-    """Collect the vocabulary-sized global dictionaries the fused kernel
-    needs, in ONE Spark job. Returns (internal_names, ret_types, members,
-    class_by_id) or None when the union exceeds ``budget`` rows (caller
-    falls back to the DataFrame implementation).
-
-    - internal_names: set of internal METHOD full_names (EdgeValidator dim)
-    - ret_types: method full_name -> tuple of METHOD_RETURN types (non-ANY)
-    - members:   (class full_name, member name) -> tuple of member types
-    - class_by_id: TYPE_DECL node_id -> full_name (only decls that parent a
-      METHOD — the `this` rule's lookup set; empty for C corpora)
-    Ids travel as strings end-to-end (never through pandas float64).
-
-    With ``with_counts=True`` the same single job also returns per-kind node
-    counts (appended as ``tag='n'`` rows) as a 5th element — the pipeline's
-    input to the run-wide broadcast-budget decision (``dims.dim_fits_hint``),
-    so no dim join pays its own probe job on the hot path.
-    """
-    methods = nodes.filter(F.col("kind") == "METHOD").select(
-        F.col("node_id").alias("mm_id"), F.col("full_name").alias("mm_full"),
-        F.col("parent_id").alias("m_parent"), F.col("is_external").alias("m_ext"),
-    )
-    name_rows = methods.filter(~F.col("m_ext")).select(
-        F.lit("name").alias("tag"), F.col("mm_full").alias("a"),
-        F.lit("").alias("b"), F.lit("").alias("c"),
-    ).distinct()
-    rets = nodes.filter(
-        (F.col("kind") == "METHOD_RETURN")
-        & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        & (F.col("type_full_name") != "ANY")
-    ).select(F.col("method_id").alias("mm_id"),
-             F.col("type_full_name").alias("ret_type"))
-    ret_rows = methods.join(rets, "mm_id").select(
-        F.lit("ret").alias("tag"), F.col("mm_full").alias("a"),
-        F.col("ret_type").alias("b"), F.lit("").alias("c"),
-    ).distinct()
-
-    classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
-        F.col("node_id").alias("c_id"), F.col("full_name").alias("c_full")
-    )
-    member_rows = (
-        nodes.filter(
-            (F.col("kind") == "MEMBER")
-            & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        )
-        .join(classes, F.col("parent_id") == F.col("c_id"))
-        .select(F.lit("member").alias("tag"), F.col("c_full").alias("a"),
-                F.col("name").alias("b"), F.col("type_full_name").alias("c"))
-        .distinct()
-    )
-
-    method_parents = methods.select(F.col("m_parent").alias("c_id")).distinct()
-    class_rows = (
-        classes.join(method_parents, "c_id", "left_semi")
-        .select(F.lit("class").alias("tag"),
-                F.col("c_id").cast("string").alias("a"),
-                F.col("c_full").alias("b"), F.lit("").alias("c"))
-    )
-
-    union = (
-        name_rows.unionByName(ret_rows).unionByName(member_rows)
-        .unionByName(class_rows)
-        .limit(budget + 1)
-    )
-    if with_counts:
-        kind_counts = nodes.groupBy("kind").count().select(
-            F.lit("n").alias("tag"), F.col("kind").alias("a"),
-            F.col("count").cast("string").alias("b"), F.lit("").alias("c"))
-        union = union.unionByName(kind_counts)
-    pdf = union.toPandas()
-    counts: dict[str, int] = {}
-    if with_counts:
-        mask = pdf["tag"] == "n"
-        counts = {a: int(b) for a, b in zip(pdf["a"][mask], pdf["b"][mask])}
-        pdf = pdf[~mask]
-    if len(pdf) > budget:
-        return None
-    internal_names: set[str] = set()
-    ret_types: dict[str, set] = {}
-    members: dict[tuple, set] = {}
-    class_by_id: dict[int, str] = {}
-    for tag, a, b, c in zip(pdf["tag"], pdf["a"], pdf["b"], pdf["c"]):
-        if tag == "name":
-            internal_names.add(a)
-        elif tag == "ret":
-            ret_types.setdefault(a, set()).add(b)
-        elif tag == "member":
-            members.setdefault((a, b), set()).add(c)
-        else:
-            class_by_id[int(a)] = b
-    out = (
-        internal_names,
-        {k: tuple(sorted(v)) for k, v in ret_types.items()},
-        {k: tuple(sorted(v)) for k, v in members.items()},
-        class_by_id,
-    )
-    return out + (counts,) if with_counts else out
+def collect_recovery_dicts(nodes: DataFrame) -> RecoveryFacts:
+    """The fact frames, lazy, plus per-kind node counts from ONE Spark job —
+    the pipeline's input to the run-wide broadcast-budget decision
+    (``dims.dim_fits_hint``), so no dim join pays its own probe job on the
+    hot path. Nothing but the counts reaches the driver."""
+    counts = {r["kind"]: r["count"]
+              for r in nodes.groupBy("kind").count().collect()}
+    internal = nodes.filter(
+        (F.col("kind") == "METHOD") & (~F.col("is_external"))
+    ).select("full_name")
+    return RecoveryFacts(internal, _method_returns(nodes),
+                         _members_dim(nodes), counts)
 
 
 def _str_or_none(v):
@@ -340,17 +270,30 @@ def _str_or_none(v):
     return v if isinstance(v, str) else None
 
 
-def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
-                             class_by_id: dict,
-                             iterations: int = ITERATIONS) -> list[tuple[int, str]]:
-    """Exact per-method mirror of ``type_recovery_events``: returns the sorted
-    distinct (identifier node_id, recovered_type) events for one method's
-    rows. Rules and round structure match the DataFrame version line-for-line
-    (declared types, `this`, then ``iterations-1`` assignment-propagation
-    rounds with variable-level hint distribution)."""
+def recover_types_for_method(
+    rows: list[dict], class_by_id: dict[int, str],
+) -> tuple[list[tuple[int, str]], list[tuple[int, str]],
+           list[tuple[int, str, str]]]:
+    """Per-method mirror of ``type_recovery_events`` over one method's rows;
+    ``class_by_id`` maps the document's TYPE_DECL ids to full_names (the
+    ``this`` rule). Returns ``(events, ret_keys, member_keys)``:
+
+    - ``events``: sorted distinct (identifier node_id, recovered_type) from
+      the rules that need only the document — declared types, ``this``, and
+      assignment transfer from typed RHS calls and RHS identifiers;
+    - ``ret_keys``: (identifier node_id, callee full_name) — the identifier
+      also takes every METHOD_RETURN type of that callee;
+    - ``member_keys``: (identifier node_id, receiver type, field name) — the
+      identifier also takes every declared type of that MEMBER.
+
+    Deferring the two lookups is exact because ``ITERATIONS`` = 2 gives one
+    assignment-propagation round: a looked-up type feeds no later round, it
+    only spreads to the other identifiers of the assigned variable, which
+    the keys already name. Rules and round structure otherwise match the
+    DataFrame version line-for-line."""
     idents = [r for r in rows if r["kind"] == "IDENTIFIER"]
     if not idents:
-        return []
+        return [], [], []
     rec: list[tuple[int, str]] = []
 
     # round 0a: declared variable types (dropDuplicates analog: deterministic
@@ -395,6 +338,7 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
 
     targets: list[tuple[int, int]] = []       # (a_id, target ident node)
     rhs_static: dict[int, set] = {}           # a_id -> typed-RHS types
+    rhs_callees: dict[int, set] = {}          # a_id -> RHS callee full_names
     rhs_ident_ids: dict[int, list[dict]] = {}  # a_id -> arg2 identifier rows
     rhs_fa_ids: dict[int, list[int]] = {}     # a_id -> arg2 fieldAccess calls
     for r in rows:
@@ -409,10 +353,9 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
                     if tfn:
                         rhs_static.setdefault(a_id, set()).add(tfn)
                     nm = _str_or_none(k.get("name")) or ""
-                    if not nm.startswith("<operator>"):
-                        for rt in ret_types.get(
-                                _str_or_none(k.get("full_name")) or "", ()):
-                            rhs_static.setdefault(a_id, set()).add(rt)
+                    callee = _str_or_none(k.get("full_name"))
+                    if callee is not None and not nm.startswith("<operator>"):
+                        rhs_callees.setdefault(a_id, set()).add(callee)
                     if nm in _FIELD_ACCESS_OPS:
                         rhs_fa_ids.setdefault(a_id, []).append(k["node_id"])
                 elif ai == 2 and k["kind"] == "IDENTIFIER":
@@ -428,40 +371,51 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
                 hints.setdefault(nm, set()).add(t)
         return hints
 
-    for _ in range(max(0, iterations - 1)):
-        var_hints = distribute()
-        # member-load RHS: fa call result types via recovered receiver
-        fa_types: dict[int, set] = {}
-        for fa in fa_ids:
-            fnames = fa_fields.get(fa)
-            if not fnames:
+    # the one assignment-propagation round (ITERATIONS - 1 == 1)
+    var_hints = distribute()
+
+    def member_keys_of(fa: int) -> set[tuple[str, str]]:
+        """(dereferenced receiver type, field) keys of a fieldAccess call,
+        via the receiver's recovered types."""
+        keys: set[tuple[str, str]] = set()
+        for rid in fa_recv.get(fa, ()):
+            nm = ident_names.get(rid)
+            if nm is None:
                 continue
-            for rid in fa_recv.get(fa, ()):
-                nm = ident_names.get(rid)
-                if nm is None:
-                    continue
-                for t in var_hints.get(nm, ()):
-                    rt = t.replace("*", "").strip()
-                    for f in fnames:
-                        for mt in members.get((rt, f), ()):
-                            fa_types.setdefault(fa, set()).add(mt)
-        new: list[tuple[int, str]] = []
-        for a_id, t_id in targets:
-            rhs = set(rhs_static.get(a_id, ()))
-            for k in rhs_ident_ids.get(a_id, ()):
-                rhs |= var_hints.get(k["name"], set())
-            for fid in rhs_fa_ids.get(a_id, ()):
-                rhs |= fa_types.get(fid, set())
-            for t in rhs:
-                new.append((t_id, t))
-        rec.extend(new)
+            for t in var_hints.get(nm, ()):
+                rt = t.replace("*", "").strip()
+                for f in fa_fields.get(fa, ()):
+                    keys.add((rt, f))
+        return keys
+
+    new: list[tuple[int, str]] = []
+    var_callees: dict[str, set] = {}
+    var_members: dict[str, set] = {}
+    for a_id, t_id in targets:
+        rhs = set(rhs_static.get(a_id, ()))
+        for k in rhs_ident_ids.get(a_id, ()):
+            rhs |= var_hints.get(k["name"], set())
+        for t in rhs:
+            new.append((t_id, t))
+        var = ident_names.get(t_id)
+        if var is None:
+            continue
+        var_callees.setdefault(var, set()).update(rhs_callees.get(a_id, ()))
+        for fid in rhs_fa_ids.get(a_id, ()):
+            var_members.setdefault(var, set()).update(member_keys_of(fid))
+    rec.extend(new)
 
     var_hints = distribute()
-    out = set()
+    events: set[tuple[int, str]] = set()
+    ret_keys: list[tuple[int, str]] = []
+    member_keys: list[tuple[int, str, str]] = []
     for i in idents:
-        for t in var_hints.get(i["name"], ()):
-            out.add((i["node_id"], t))
-    return sorted(out)
+        nid, nm = i["node_id"], i["name"]
+        for t in var_hints.get(nm, ()):
+            events.add((nid, t))
+        ret_keys.extend((nid, c) for c in var_callees.get(nm, ()))
+        member_keys.extend((nid, rt, f) for rt, f in var_members.get(nm, ()))
+    return sorted(events), ret_keys, member_keys
 
 
 def type_recovery_pass(nodes: DataFrame, iterations: int = ITERATIONS) -> DataFrame:

@@ -1,25 +1,21 @@
 """End-to-end CPG triple factory (SURVEY.md §7.1 stage order).
 
-docs → [ast] parse (mapInPandas) → [base] type/stub/paramOut passes (joins)
+docs → [ast] parse (mapInArrow) → [base] type/stub/paramOut passes (joins)
      → [kernel] per-doc fused CFG/dominators/reaching-def/type-recovery
      → [callgraph] static/CHA/naive linkers → [triples] materialization.
 
-Two physical paths share the logical stage order:
-
-- **fused** (default): everything document-local runs inside ONE shuffle-free
-  ``mapInPandas`` over the parse partitions (CFG, dominators/CDG,
-  reaching-def, and — round 3 — type recovery), fed by vocabulary-sized
-  broadcast dictionaries collected in a single job. Stage boundaries spill
-  to parquet (``spill.py``): columnar, atomic-rename, column-pruned
-  downstream — the barriers that were measured FLAT at 8→32 cores as
-  deserialized localCheckpoint blocks. Small vocabulary frames (TYPE rows,
-  stubs, namespaces) materialize individually and concurrently with the
-  kernel job; the wide 5-way nodes union is never copied — it stays a lazy
-  union over materialized leaves.
-- **DataFrame fallback**: when the broadcast dictionaries exceed their
-  budget (100×-scale corpora), the same passes run as distributed
-  join/cogroup DataFrame implementations (cfg_pass, dominator_pass,
-  reaching_def_pass, type_recovery_events) — degrade, don't die.
+Everything document-local runs inside ONE shuffle-free ``mapInArrow`` over
+the parse partitions (``operators/method_kernels.py``: CFG, dominators/CDG,
+reaching-def and type recovery). The kernel reads no corpus-wide fact: it
+emits lookup keys next to its edges, and joins after it resolve them against
+the fact frames of ``type_recovery.collect_recovery_dicts`` — broadcast
+under the run's vocabulary budget, shuffle joins above it, so one path
+serves every corpus size. Stage boundaries spill to parquet (``spill.py``):
+columnar, atomic-rename, column-pruned downstream — the barriers that were
+measured FLAT at 8→32 cores as deserialized localCheckpoint blocks. Small
+vocabulary frames (TYPE rows, stubs, namespaces) materialize individually
+and concurrently with the kernel job; the wide 5-way nodes union is never
+copied — it stays a lazy union over materialized leaves.
 
 With ``out_dir`` every stage boundary is a durable parquet snapshot with
 lineage rows and a resume manifest, so any failed partition range resumes
@@ -76,7 +72,6 @@ def run_pipeline(
     n_parts: int = 32,
     with_dataflow: bool = True,
     with_dominators: bool = True,
-    fuse_kernels: bool | None = None,
 ) -> CpgResult:
     stats: dict = {}
 
@@ -119,7 +114,7 @@ def run_pipeline(
         # stream) — directory-level pruning beats a rowtype filter that every
         # scan would otherwise have to decode 100% of rows to apply
         spill0 = SpillDir(None)
-        # 2x-core parse fan-out: the parse is a Python-cpu-bound mapInPandas,
+        # 2x-core parse fan-out: the parse is a Python-cpu-bound mapInArrow,
         # so its wall is the SLOWEST partition — at exactly one partition per
         # core a single skewed doc pack idles every other core for the tail
         # (measured ~1.5x instead of 4x at 8->32). Twice the partitions
@@ -133,55 +128,36 @@ def run_pipeline(
         stats["t_parse"] = round(time.time() - t0, 2)
 
     nodes0, edges0, spans = split_rows(cpg_rows)
-
-    if fuse_kernels is not False:
-        # the broadcast dictionaries are collected INSIDE the fused path's
-        # job pool (overlapped with the vocabulary-frame materializations);
-        # a None result there falls through to the DataFrame path
-        res = _run_fused(spark, cpg_rows, nodes0, edges0, spans,
-                         out_dir, n_parts, with_dataflow, with_dominators,
-                         stats, t0)
-        if res is not None:
-            return res
-    return _run_dataframe(spark, cpg_rows, nodes0, edges0, spans,
-                          out_dir, n_parts, with_dataflow, with_dominators,
-                          stats, t0)
+    return _run_fused(spark, nodes0, edges0, spans, out_dir, n_parts,
+                      with_dataflow, with_dominators, stats)
 
 
-# ---------------------------------------------------------------------------
-# fused fast path
-# ---------------------------------------------------------------------------
-
-def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
-               out_dir, n_parts, with_dataflow, with_dominators,
-               stats, t0) -> CpgResult | None:
-    from .operators.dims import MAX_BROADCAST_DIM, dim_fits_hint
-    from .operators.method_kernels import fused_method_kernels
-    from .operators.type_recovery import (
-        collect_recovery_dicts,
-        field_access_linker,
+def _run_fused(spark, nodes0, edges0, spans, out_dir, n_parts,
+               with_dataflow, with_dominators, stats) -> CpgResult:
+    from .operators import type_recovery
+    from .operators.dims import dim_fits_hint, fits_budget
+    from .operators.method_kernels import (
+        fused_method_kernels,
+        kernel_edges,
+        kernel_type_events,
+        vetted_reaching_defs,
     )
 
     spill = SpillDir(out_dir)
 
-    # ---- dicts + kernel job (python-heavy, scales with cores) — the
-    # dictionary collect is chained in front of the kernel INSIDE the pool so
-    # it overlaps the vocabulary-frame materializations instead of serializing
-    # the whole pipeline behind it (the round-2 profile's flat ~5 s barrier)
+    # ---- fact frames + kind counts: one small job, overlapped with the
+    # kernel and the vocabulary-frame materializations. Looked up on the
+    # module at call time, so a wrapper installed there sees the call.
     def dicts_job():
-        return collect_recovery_dicts(nodes0, with_counts=True)
+        facts = type_recovery.collect_recovery_dicts(nodes0)
+        stats["kind_counts"] = facts.kind_counts
+        return facts
 
-    def kernel_job() -> DataFrame | None:
-        dicts = dicts_f.result()
-        if dicts is None:
-            return None
-        internal_names, ret_types, members, class_by_id, counts = dicts
-        stats["kind_counts"] = counts
-        k = fused_method_kernels(
-            nodes0, internal_names,
-            with_dominators=with_dominators, with_dataflow=with_dataflow,
-            recovery_dicts=(ret_types, members, class_by_id),
-        )
+    # ---- kernel job (python-heavy, scales with cores): needs no fact, so it
+    # starts with the pool
+    def kernel_job() -> DataFrame:
+        k = fused_method_kernels(nodes0, with_dominators=with_dominators,
+                                 with_dataflow=with_dataflow)
         return spill.write(k, "kernel_rows")
 
     # ---- base vocabulary frames: each is small (type/stub/namespace
@@ -222,16 +198,13 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
     from .operators.dims import budgeted_broadcast
 
     # ---- kernel-independent edges: everything except the field-access and
-    # hint linkers (which consume the kernel's _TYPE_HINT rows) depends only
+    # hint linkers (which consume the kernel's type events) depends only
     # on the vocabulary frames — materialize those branches INSIDE the pool,
     # so their many small join stages overlap the kernel's long Python stage
     # (the kernel's JVM task threads mostly wait on worker sockets; FAIR
     # scheduling shares the slots)
     def base_job():
-        dicts = dicts_f.result()
-        if dicts is None:
-            return None
-        counts = dicts[4]
+        counts = dicts_f.result().kind_counts
         types, decl_stubs = types_f.result()
         m_stubs = stubs_f.result()
         param_outs = params_f.result()
@@ -248,7 +221,7 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
                                              "FILE"))
         )
         stats["vocab_n"] = vocab_n
-        fits = vocab_n <= MAX_BROADCAST_DIM
+        fits = fits_budget(vocab_n)
 
         m_stub_edges = (
             m_stubs.filter(F.col("parent_id").isNotNull())
@@ -338,34 +311,34 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
         deps_f = pool.submit(timed("deps", deps_job))
         base_f = pool.submit(timed("base_edges", base_job))
         kernel_out = kernel_f.result()
-        base_res = base_f.result()
+        facts = dicts_f.result()
+        (types, decl_stubs, m_stubs, param_outs, ns_nodes, dep_nodes,
+         nodes, fits, base_norec, cand) = base_f.result()
     stats["t_pool"] = round(time.time() - t_pool, 2)
-    if kernel_out is None or base_res is None:
-        return None  # dictionaries over budget → DataFrame fallback
-    (types, decl_stubs, m_stubs, param_outs, ns_nodes, dep_nodes,
-     nodes, fits, base_norec, cand) = base_res
-
-    # recovery events came out of the kernel as _TYPE_HINT rows
-    recovered = kernel_out.filter(F.col("kind") == "_TYPE_HINT").select(
-        F.col("src").alias("node_id"), F.col("variable").alias("recovered_type")
-    )
-    kernel_edges = kernel_out.filter(F.col("kind") != "_TYPE_HINT")
 
     with dim_fits_hint(fits):
-        # ---- stage: the kernel-dependent edge tail — field-access linking,
-        # hint candidates, and the one-pass call arbitration over the
-        # pre-materialized candidate pool
+        # ---- stage: the kernel-dependent edge tail — the kernel's deferred
+        # lookups (type events, vetted REACHING_DEF edges), field-access
+        # linking, hint candidates, and the one-pass call arbitration over
+        # the pre-materialized candidate pool
+        recovered = kernel_type_events(kernel_out, facts.method_returns,
+                                       facts.members)
         call_edges = link_calls(nodes, edges0, recovered=recovered,
                                 pre_candidates=cand)
         t2 = time.time()
-        post_lazy = field_access_linker(nodes0, edges0, recovered=recovered) \
+        post_lazy = (
+            type_recovery.field_access_linker(nodes0, edges0,
+                                              recovered=recovered)
             .unionByName(call_edges)
+            .unionByName(vetted_reaching_defs(kernel_out,
+                                              facts.internal_methods))
+        )
         post_lazy._jdf.queryExecution().executedPlan()
         stats["t_edges_plan"] = round(time.time() - t2, 2)
         base_call = base_norec.unionByName(
             spill.write(post_lazy, "edges_call_fa"))
         stats["t_edges_spill"] = round(time.time() - t2, 2)
-        edges = kernel_edges.unionByName(base_call)
+        edges = kernel_edges(kernel_out).unionByName(base_call)
         if out_dir:
             append_lineage(spark, out_dir,
                            edges.withColumn("part_id", part_id_col(n_parts=n_parts)),
@@ -394,120 +367,3 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
     return CpgResult(nodes=nodes, edges=edges, spans=spans, triples=triples,
                      link_misses=misses, stats=stats)
 
-
-# ---------------------------------------------------------------------------
-# distributed DataFrame fallback (dictionaries over budget, or fuse_kernels
-# explicitly disabled for parity testing)
-# ---------------------------------------------------------------------------
-
-def _run_dataframe(spark, cpg_rows, nodes0, edges0, spans,
-                   out_dir, n_parts, with_dataflow, with_dominators,
-                   stats, t0) -> CpgResult:
-    from .operators.reaching_def import reaching_def_pass
-
-    # ---- stage: base (types, stubs, paramOuts, type linking) ---------------
-    types = type_nodes(nodes0)
-    decl_stubs = type_decl_stubs(types, nodes0)
-    m_stubs, m_stub_edges = method_stubs(nodes0, edges0)
-    param_outs, param_edges = parameter_out_pass(nodes0)
-    ns_nodes, ns_edges = namespace_pass(nodes0)
-    dep_nodes = dependency_pass(nodes0)
-    if not out_dir:
-        m_stubs = m_stubs.persist()
-        param_outs = param_outs.persist()
-        dep_nodes = dep_nodes.persist()
-
-    nodes = (
-        nodes0.unionByName(types).unionByName(decl_stubs)
-        .unionByName(m_stubs).unionByName(param_outs).unionByName(ns_nodes)
-        .unionByName(dep_nodes)
-    )
-
-    if out_dir:
-        t1 = time.time()
-        nodes = _materialize(spark, nodes, os.path.join(out_dir, "nodes"))
-        append_lineage(spark, out_dir,
-                       nodes.withColumn("part_id", part_id_col(n_parts=n_parts)),
-                       "base_nodes", t1)
-        write_manifest(out_dir, "base", list(range(n_parts)), complete=True)
-    else:
-        # eager barrier + lineage truncation: many downstream consumers; see
-        # round-2 notes (plan-tree growth OOMs the driver without this)
-        nodes = nodes.localCheckpoint(eager=True)
-
-    from .operators.type_recovery import (
-        field_access_linker,
-        type_recovery_events,
-    )
-
-    recovered = type_recovery_events(nodes0).localCheckpoint(eager=True)
-    base_edges = (
-        edges0.unionByName(m_stub_edges).unionByName(param_edges)
-        .unionByName(type_ref_pass(types, nodes0))
-        .unionByName(eval_type_pass(nodes, types))
-        .unionByName(field_access_linker(nodes0, edges0, recovered=recovered))
-        .unionByName(method_ref_linker(nodes))
-        .unionByName(macro_ref_linker(nodes0))
-        .unionByName(imports_linker(nodes0, dep_nodes))
-        .unionByName(ns_edges)
-    )
-
-    # ---- stage: controlflow kernels (cogrouped per-pass implementations)
-    from .operators.cfg_pass import cfg_pass
-
-    kernel_edges = cfg_pass(nodes0)
-    if with_dominators:
-        if not out_dir:
-            kernel_edges = kernel_edges.persist()
-        from .operators.dominators import dominator_pass
-
-        kernel_edges = kernel_edges.unionByName(
-            dominator_pass(nodes0, kernel_edges))
-
-    # ---- stage: callgraph ----------------------------------------------------
-    # One-pass arbitration, same as the fused path: candidate_pool runs the
-    # naive name join on LEFTOVER calls only (anti-join before the quadratic
-    # join, NaiveCallLinker.scala:13-28), and link_calls arbitrates with a
-    # map-side-combined aggregate instead of Window(partitionBy src) — this
-    # fallback is exactly the path taken when dictionaries exceed the
-    # broadcast budget, i.e. at scale, so it must carry the same plan fixes
-    # (VERDICT r3 "What's wrong" #2).
-    from .operators.callgraph import link_calls
-
-    call_edges = link_calls(nodes, edges0, recovered=recovered)
-
-    edges = base_edges.unionByName(kernel_edges).unionByName(call_edges)
-
-    if out_dir:
-        t2 = time.time()
-        edges = _materialize(spark, edges, os.path.join(out_dir, "edges_pre_ddg"))
-        append_lineage(spark, out_dir,
-                       edges.withColumn("part_id", part_id_col(n_parts=n_parts)),
-                       "edges_pre_ddg", t2)
-    else:
-        edges = edges.localCheckpoint(eager=True)
-
-    # ---- stage: dataflow (cogrouped reaching-def) ----------------------------
-    if with_dataflow:
-        rd_edges = reaching_def_pass(nodes, edges)
-        edges = edges.unionByName(rd_edges)
-        if not out_dir:
-            edges = edges.persist()
-
-    misses = link_misses(nodes, call_edges)
-
-    # ---- stage: triples --------------------------------------------------------
-    triples = build_triples(nodes, edges, spans, n_parts=n_parts)
-    if out_dir:
-        t3 = time.time()
-        triples = commit_snapshot(spark, triples, out_dir, "triples",
-                                  list(range(n_parts)), partition_by="part_id")
-        append_lineage(spark, out_dir, triples, "triples", t3)
-
-    return CpgResult(nodes=nodes, edges=edges, spans=spans, triples=triples,
-                     link_misses=misses, stats=stats)
-
-
-def _materialize(spark: SparkSession, df: DataFrame, path: str, *_part_cols) -> DataFrame:
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)

@@ -9,6 +9,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def driver_memory(share: float = 0.3, max_mb: int = 8192) -> str:
+    """``SPARK_DRIVER_MEMORY``, else ``share`` of the host's MemTotal,
+    clamped to [1 GiB, ``max_mb``] — a heap that fits the host it runs on."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f
+                        if line.startswith("MemTotal:"))
+    return f"{max(1024, min(max_mb, int(total_kb / 1024 * share)))}m"
+
+
 def get_spark(
     app_name: str = "joern_spark",
     cpus: int | None = None,
@@ -22,7 +40,7 @@ def get_spark(
     partitions default to the core count — at 100 TB you would size this to
     ~2-3x total executor cores instead (and rely on AQE coalescing).
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or host_cpus()
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
@@ -34,7 +52,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # pipeline stages reuse the parse output on several join sides; the

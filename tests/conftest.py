@@ -13,16 +13,20 @@ import pytest
 
 from joern_spark.corpus import fixture_docs, fixture_docs_df
 from joern_spark.pipeline import run_pipeline
-from joern_spark.session import get_spark
+from joern_spark.session import driver_memory, get_spark, host_cpus
 
 
 @pytest.fixture(scope="session")
 def spark():
-    # 20g heap: the session accumulates pipeline caches, localCheckpoint
-    # blocks (flow stitching), and broadcasts across every test module — the
-    # 8g default dies mid-suite under host memory pressure
-    s = get_spark(app_name="joern_spark_tests", cpus=8, shuffle_partitions=8,
-                  extra_conf={"spark.driver.memory": "20g",
+    # cores and heap come from the host (SPARK_GRAFT_CPUS, MemTotal). The heap
+    # share is large because the session accumulates pipeline caches,
+    # localCheckpoint blocks (flow stitching), and broadcasts across every
+    # test module; a heap larger than the host gets the JVM OOM-killed
+    cpus = host_cpus()
+    s = get_spark(app_name="joern_spark_tests", cpus=cpus,
+                  shuffle_partitions=cpus,
+                  extra_conf={"spark.driver.memory":
+                              driver_memory(share=0.57, max_mb=20 * 1024),
                               "spark.ui.showConsoleProgress": "false"})
     yield s
 
