@@ -11,9 +11,10 @@ arguments) and at call sites (into callee returns), k-limited at
 Spark shape: instead of per-sink tasks on a thread pool, ONE frontier
 DataFrame carries every sink's wavefront simultaneously; each round is
   frontier ⋈ reversed REACHING_DEF  ∪  param→arg hop  ∪  call→return hop
-with a visited-set anti-join. Rounds are bounded by the graph diameter ×
-call depth; every sink shares the same joins, which is exactly the path-cache
-sharing the reference implements by hand (``EngineConfig.shareCacheBetweenTasks``).
+with a visited-set anti-join (``fixpoint.semi_naive``). Rounds are bounded by
+the graph diameter × call depth; every sink shares the same joins, which is
+exactly the path-cache sharing the reference implements by hand
+(``EngineConfig.shareCacheBetweenTasks``).
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.dims import MAX_BROADCAST_DIM
+from .operators.fixpoint import semi_naive
 
 MAX_CALL_DEPTH = 4  # Engine.scala:322
 MAX_ROUNDS = 128
@@ -119,13 +121,7 @@ def reachable_by(nodes: DataFrame, edges: DataFrame,
     if own_inter:
         inter_back = interproc_back_edges(nodes, edges).persist()
 
-    frontier = sinks.select(
-        F.col("node_id"), F.col("node_id").alias("sink_id"), F.lit(0).alias("depth")
-    ).distinct()
-    visited = frontier.select("node_id", "sink_id", "depth").localCheckpoint(eager=True)
-    frontier = visited
-
-    for _ in range(MAX_ROUNDS):
+    def step(frontier: DataFrame) -> DataFrame:
         intra = frontier.join(rd_back, "node_id").select(
             F.col("prev_id").alias("node_id"), "sink_id", "depth"
         )
@@ -135,16 +131,14 @@ def reachable_by(nodes: DataFrame, edges: DataFrame,
             .select(F.col("prev_id").alias("node_id"), "sink_id",
                     (F.col("depth") + 1).alias("depth"))
         )
-        nxt = intra.unionByName(inter).groupBy("node_id", "sink_id").agg(
+        return intra.unionByName(inter).groupBy("node_id", "sink_id").agg(
             F.min("depth").alias("depth")
         )
-        nxt = nxt.join(
-            visited.select("node_id", "sink_id"), ["node_id", "sink_id"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+
+    seed = sinks.select(
+        F.col("node_id"), F.col("node_id").alias("sink_id"), F.lit(0).alias("depth")
+    ).distinct()
+    visited = semi_naive(seed, step, ["node_id", "sink_id"], MAX_ROUNDS)
 
     hits = visited.join(
         sources.select(F.col("node_id").alias("source_probe")).distinct(),
@@ -154,7 +148,7 @@ def reachable_by(nodes: DataFrame, edges: DataFrame,
         F.col("node_id").alias("source_id"), F.col("sink_id").alias("sink_id")
     ).distinct()
     if own_inter:
-        # visited is eagerly localCheckpointed each round, so the relation is
+        # semi_naive materializes visited each round, so the relation is
         # no longer needed once the loop has converged
         inter_back.unpersist()
     return out

@@ -6,13 +6,13 @@ Reference passes (SURVEY.md §2.A #21-24):
   when the call carries one). This is the hot join — callee names like
   ``printf``/``malloc`` are heavily skewed, so the METHOD dimension is
   broadcast (map-side join: no shuffle of the skewed fact side at all); if the
-  dimension outgrew the broadcast threshold the fallback is AQE skew-join
-  (enabled in session conf).
+  dimension outgrows the broadcast budget, the join is salted instead
+  (``salting.salted_join``: hot callee names are replicated across salts).
 - DynamicCallLinker (``DynamicCallLinker.scala:25-229``): CHA/SAFEDISPATCH —
   resolve each DYNAMIC_DISPATCH call ``T.m`` against every implementor of
   ``m`` in the subclass closure of ``T``, with super-class fallback and
-  internal-preferred pruning. The inheritance transitive closure is a bounded
-  iterative self-join (class-hierarchy depth iterations).
+  internal-preferred pruning. The inheritance transitive closure is a
+  driver-side walk, or ``fixpoint.semi_naive`` when the hierarchy is big.
 - NaiveCallLinker (``NaiveCallLinker.scala:13-28``): leftover calls by bare
   name (last-resort alias dictionary).
 
@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dims import MAX_BROADCAST_DIM, budgeted_broadcast
+from .dims import MAX_BROADCAST_DIM, budgeted_broadcast, fits_broadcast
+from .fixpoint import semi_naive
 
 MAX_HIERARCHY_DEPTH = 20  # bound for the inheritance closure loop
 # driver-side closure is a collect, i.e. the same memory class as a broadcast
@@ -102,14 +103,7 @@ def _static_candidates(nodes: DataFrame, strategy: str = "auto",
     calls = _static_calls(nodes)
     methods = _method_dim(nodes)
     if strategy == "auto":
-        from . import dims
-
-        if dims._FITS_HINT is not None:
-            strategy = "broadcast" if dims._FITS_HINT else "salted"
-        else:
-            # bounded count: stops scanning at budget+1, never a full aggregate
-            n_methods = methods.limit(broadcast_budget + 1).count()
-            strategy = "broadcast" if n_methods <= broadcast_budget else "salted"
+        strategy = "broadcast" if fits_broadcast(methods, broadcast_budget) else "salted"
     if strategy == "salted":
         from .salting import salted_join
 
@@ -171,9 +165,8 @@ def method_ref_linker(nodes: DataFrame) -> DataFrame:
 def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Transitive subclass→superclass pairs over INHERITS_FROM.
 
-    Returns (sub_full, super_full) including the reflexive pair. Bounded
-    iterative self-join — iterations = class-hierarchy depth, which is small
-    even at web scale; each step is an equi-join on the closure frontier.
+    Returns (sub_full, super_full) including the reflexive pair. Rounds =
+    class-hierarchy depth, which is small even at web scale.
     """
     decls = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         F.col("node_id").alias("decl_id"), F.col("full_name").alias("decl_full")
@@ -191,11 +184,9 @@ def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     reflexive = decls.select(
         F.col("decl_full").alias("sub"), F.col("decl_full").alias("sup")
     ).distinct()
-    closure = base.unionByName(reflexive).distinct()
     # the class hierarchy is a dimension (distinct class names), usually tiny
     # relative to the fact tables: compute the closure driver-side and
-    # re-broadcast when it fits, otherwise fall back to bounded iterative
-    # self-joins (each iteration = one equi-join on the frontier).
+    # re-broadcast when it fits, otherwise run the semi-naive fixpoint
     spark = nodes.sparkSession
     base_rows = base.limit(SMALL_HIERARCHY_LIMIT + 1).collect()
     if len(base_rows) <= SMALL_HIERARCHY_LIMIT:
@@ -216,19 +207,14 @@ def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             sorted(result) or [("", "")], schema="sub string, sup string"
         ).filter(F.col("sub") != "")
         return pairs.unionByName(reflexive).distinct()
-    closure = closure.localCheckpoint()
-    for _ in range(MAX_HIERARCHY_DEPTH):
-        step = (
-            closure.alias("a")
-            .join(base.alias("b"), F.col("a.sup") == F.col("b.sub"))
-            .select(F.col("a.sub").alias("sub"), F.col("b.sup").alias("sup"))
-        )
-        new_closure = closure.unionByName(step).distinct().localCheckpoint()
-        if new_closure.count() == closure.count():
-            closure = new_closure
-            break
-        closure = new_closure
-    return closure
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return frontier.alias("a").join(
+            base.alias("b"), F.col("a.sup") == F.col("b.sub")
+        ).select("a.sub", "b.sup").distinct()
+
+    return semi_naive(base.unionByName(reflexive).distinct(), step,
+                      ["sub", "sup"], MAX_HIERARCHY_DEPTH)
 
 
 def _dynamic_candidates(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:

@@ -14,7 +14,7 @@ The pipeline computes the corpus vocabulary size ONCE per run (from the kind
 counts of the recovery-facts job), decides it with :func:`fits_budget` and
 installs the answer with :func:`dim_fits_hint`, so the hot path pays zero
 extra probe jobs; standalone calls (tests, DSL, flow queries) probe per-site
-with an early-stopping ``limit(budget+1).count()``.
+with an early-stopping ``limit(budget+1).count()`` (:func:`fits_broadcast`).
 """
 
 from __future__ import annotations
@@ -60,11 +60,9 @@ _PROBE_MEMO: dict[tuple[int, int, int | None], bool] = {}
 _PROBE_MEMO_MAX = 4096
 
 
-def budgeted_broadcast(dim: DataFrame, budget: int = MAX_BROADCAST_DIM,
-                       fits: bool | None = None,
-                       bound: DataFrame | None = None) -> DataFrame:
-    """``F.broadcast(dim)`` when it fits the budget, else ``dim`` unhinted
-    (shuffle join). ``fits=None`` consults the run hint, then falls back to a
+def fits_broadcast(dim: DataFrame, budget: int = MAX_BROADCAST_DIM,
+                   bound: DataFrame | None = None) -> bool:
+    """Does ``dim`` fit ``budget``? The run hint if installed, else a
     memoized bounded count that stops scanning at ``budget + 1`` rows.
 
     ``bound``: optional frame whose row count upper-bounds ``dim``'s (e.g.
@@ -74,27 +72,35 @@ def budgeted_broadcast(dim: DataFrame, budget: int = MAX_BROADCAST_DIM,
     join strategy. Conservative by construction: an over-budget bound picks
     the shuffle join even when the distinct dim would have fit, which
     degrades the plan, never the result."""
+    if _FITS_HINT is not None:
+        return _FITS_HINT
+    try:
+        # the verdict depends on WHICH frame was probed: a conservative
+        # bound-based False must not be replayed for bound-less callers
+        # of the same dim (or vice versa), so the bound is part of the key
+        key = (
+            dim.semanticHash(),
+            budget,
+            bound.semanticHash() if bound is not None else None,
+        )
+    except Exception:
+        key = None
+    if key in _PROBE_MEMO:
+        return _PROBE_MEMO[key]
+    probe = bound if bound is not None else dim
+    fits = probe.limit(budget + 1).count() <= budget
+    if key is not None:
+        if len(_PROBE_MEMO) >= _PROBE_MEMO_MAX:
+            _PROBE_MEMO.clear()
+        _PROBE_MEMO[key] = fits
+    return fits
+
+
+def budgeted_broadcast(dim: DataFrame, budget: int = MAX_BROADCAST_DIM,
+                       fits: bool | None = None,
+                       bound: DataFrame | None = None) -> DataFrame:
+    """``F.broadcast(dim)`` when ``fits`` (default: :func:`fits_broadcast`)
+    says it fits, else ``dim`` unhinted (shuffle join)."""
     if fits is None:
-        fits = _FITS_HINT
-    if fits is None:
-        try:
-            # the verdict depends on WHICH frame was probed: a conservative
-            # bound-based False must not be replayed for bound-less callers
-            # of the same dim (or vice versa), so the bound is part of the key
-            key = (
-                dim.semanticHash(),
-                budget,
-                bound.semanticHash() if bound is not None else None,
-            )
-        except Exception:
-            key = None
-        if key is not None and key in _PROBE_MEMO:
-            fits = _PROBE_MEMO[key]
-        else:
-            probe = bound if bound is not None else dim
-            fits = probe.limit(budget + 1).count() <= budget
-            if key is not None:
-                if len(_PROBE_MEMO) >= _PROBE_MEMO_MAX:
-                    _PROBE_MEMO.clear()
-                _PROBE_MEMO[key] = fits
+        fits = fits_broadcast(dim, budget, bound)
     return F.broadcast(dim) if fits else dim

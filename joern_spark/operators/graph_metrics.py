@@ -17,12 +17,9 @@ Two query families the reference exposes through its DSL and querydb:
   method-level call graph — the engine behind the DSL's
   ``method.repeat(_.callee)`` step (reference
   ``semanticcpg/.../language/package.scala`` RepeatTraversal /
-  querydb interprocedural queries). Distributed BFS: each round is one
-  equi-join of the frontier against the (re-used, checkpointed) edge
-  relation keyed by caller, with a left-anti join against the visited
-  set so every pair is expanded exactly once — level-synchronous BFS,
-  which also makes ``hops`` the MINIMUM hop count for free. Rounds are
-  bounded by ``CLOSURE_MAX_HOPS`` in both this implementation and the
+  querydb interprocedural queries). ``fixpoint.semi_naive`` expands each
+  pair once, level by level, so ``hops`` is the MINIMUM hop count. Rounds
+  are bounded by ``CLOSURE_MAX_HOPS`` in both this implementation and the
   DuckDB recursive-CTE oracle, so semantics stay identical.
 
 At cluster scale the BFS frontier join shuffles on ``caller_mid`` every
@@ -35,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import semi_naive
 
 # loop-shaped control structures, reference Metrics.scala:163-170
 # (controlStructureType("(FOR|DO|WHILE)"))
@@ -110,9 +109,9 @@ def call_closure(nodes: DataFrame, edges: DataFrame,
     """Transitive (caller, callee) method pairs within ``max_hops``.
 
     Columns: src_full_name, dst_full_name, hops (minimum hop count).
-    Level-synchronous distributed BFS on method ids; names are joined
-    at the end and min-hop re-aggregated so stub/internal METHODs that
-    share a full_name collapse to one row.
+    The closure runs on method ids; names are joined at the end and min-hop
+    re-aggregated so stub/internal METHODs that share a full_name collapse
+    to one row.
     """
     caller = nodes.select(
         F.col("node_id").alias("src"), F.col("method_id").alias("caller_mid")
@@ -125,29 +124,21 @@ def call_closure(nodes: DataFrame, edges: DataFrame,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    step = base.select(
-        F.col("caller_mid").alias("frontier_mid"), F.col("callee_mid").alias("next_mid")
-    )
 
-    acc = base.select(
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
+            frontier.join(base, frontier.dst_mid == base.caller_mid)
+            .select("root_mid", F.col("callee_mid").alias("dst_mid"),
+                    (F.col("hops") + 1).alias("hops"))
+            .distinct()
+        )
+
+    seed = base.select(
         F.col("caller_mid").alias("root_mid"),
         F.col("callee_mid").alias("dst_mid"),
         F.lit(1).alias("hops"),
-    ).localCheckpoint(eager=True)
-    frontier = acc
-    for depth in range(2, max_hops + 1):
-        nxt = (
-            frontier.join(step, frontier.dst_mid == step.frontier_mid)
-            .select("root_mid", F.col("next_mid").alias("dst_mid"))
-            .distinct()
-            .join(acc.select("root_mid", "dst_mid"), ["root_mid", "dst_mid"], "left_anti")
-            .withColumn("hops", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        acc = acc.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    )
+    acc = semi_naive(seed, step, ["root_mid", "dst_mid"], max_hops - 1)
 
     names = nodes.filter(F.col("kind") == "METHOD").select(
         F.col("node_id").alias("mid"), F.col("full_name").alias("fn")

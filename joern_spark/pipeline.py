@@ -210,19 +210,6 @@ def _run_fused(spark, nodes0, edges0, spans, out_dir, n_parts,
         param_outs = params_f.result()
         ns_nodes = ns_f.result()
         dep_nodes = deps_f.result()
-        # run-wide broadcast-budget decision: every dimension any downstream
-        # join broadcasts is vocabulary-or-stub-sized; their union is bounded
-        # by these kind counts, so one hint replaces a per-join probe job.
-        # Over budget → every dim join plans a shuffle join (degrade, not die)
-        vocab_n = (
-            m_stubs.count() + types.count() + decl_stubs.count()
-            + ns_nodes.count() + dep_nodes.count()
-            + sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER",
-                                             "FILE"))
-        )
-        stats["vocab_n"] = vocab_n
-        fits = fits_budget(vocab_n)
-
         m_stub_edges = (
             m_stubs.filter(F.col("parent_id").isNotNull())
             .select(F.col("parent_id").alias("src"),
@@ -264,6 +251,18 @@ def _run_fused(spark, nodes0, edges0, spans, out_dir, n_parts,
             .unionByName(dep_nodes)
         ).localCheckpoint(eager=True)
         nodes = nodes0.unionByName(vocab_nodes)
+        # run-wide broadcast-budget decision: every dimension any downstream
+        # join broadcasts is vocabulary-or-stub-sized; their union is bounded
+        # by these kind counts, so one hint replaces a per-join probe job.
+        # Over budget → every dim join plans a shuffle join (degrade, not die).
+        # The per-parameter OUT nodes are not vocabulary
+        vocab_n = (
+            vocab_nodes.filter(F.col("kind") != "METHOD_PARAMETER_OUT").count()
+            + sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER",
+                                             "FILE"))
+        )
+        stats["vocab_n"] = vocab_n
+        fits = fits_budget(vocab_n)
         with dim_fits_hint(fits):
             ns_edges = (
                 nodes0.filter(F.col("kind") == "NAMESPACE_BLOCK")

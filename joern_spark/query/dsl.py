@@ -11,8 +11,9 @@ Step catalogue mirrored from the reference (file:line cites per method):
 
 Scale shape: the frontier is always a narrow (node_id) projection; every hop
 joins frontier → edges[kind] → nodes, i.e. two hash joins on 64-bit keys.
-Transitive steps (`ast`, `repeat`) iterate bounded rounds with a visited-set
-anti-join (frontier stays deduplicated, no exponential blowup).
+Transitive steps (`ast`, dominators, CDG) run ``fixpoint.semi_naive``:
+bounded rounds with a visited-set anti-join (frontier stays deduplicated, no
+exponential blowup); `repeat` runs a user step for bounded rounds.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.fixpoint import semi_naive
 
 # operator-extension families (operatorextension/package.scala:10-126)
 ASSIGNMENT_OPS = [
@@ -365,33 +368,27 @@ class CpgQuery:
     # ---- bounded transitive closure -------------------------------------
     def _closure(self, edge_kind: str, include_self: bool,
                  forward: bool = True) -> "CpgQuery":
-        """Iterative frontier expansion with visited-set anti-join.
-
-        Bounded by MAX_REPEAT rounds; each round is one equi-join on the
-        (deduplicated) frontier — the large-graph-safe shape for `repeat`.
-        """
+        """``semi_naive`` over ``edge_kind`` edges, at most MAX_REPEAT rounds.
+        Seed rows carry ``is_seed``, so ``include_self=False`` drops them
+        even when a cycle reaches them again."""
         e = self.cpg.edges.filter(F.col("kind") == edge_kind)
         here, there = ("src", "dst") if forward else ("dst", "src")
-        step = e.select(F.col(here).alias("node_id"), F.col(there).alias("next_id"))
+        hop = e.select(F.col(here).alias("node_id"), F.col(there).alias("next_id"))
 
-        visited = self.df.select("node_id").distinct().localCheckpoint(eager=True)
-        frontier = visited
-        result = visited if include_self else None
-        for _ in range(MAX_REPEAT):
-            nxt = (
-                frontier.join(step, "node_id")
-                .select(F.col("next_id").alias("node_id"))
+        def step(frontier: DataFrame) -> DataFrame:
+            return (
+                frontier.join(hop, "node_id")
+                .select(F.col("next_id").alias("node_id"),
+                        F.lit(False).alias("is_seed"))
                 .distinct()
             )
-            nxt = nxt.join(visited, "node_id", "left_anti").localCheckpoint(eager=True)
-            if nxt.limit(1).count() == 0:
-                break
-            result = nxt if result is None else result.unionByName(nxt)
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        if result is None:
-            result = visited.limit(0)
-        return CpgQuery(self.cpg, result.distinct().join(self.cpg.nodes, "node_id"))
+
+        seed = self.df.select("node_id", F.lit(True).alias("is_seed")).distinct()
+        visited = semi_naive(seed, step, ["node_id"], MAX_REPEAT)
+        if not include_self:
+            visited = visited.filter(~F.col("is_seed"))
+        return CpgQuery(self.cpg,
+                        visited.select("node_id").join(self.cpg.nodes, "node_id"))
 
     def repeat(self, step_fn, until=None, times: int | None = None,
                emit: bool = False) -> "CpgQuery":

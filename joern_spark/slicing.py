@@ -10,7 +10,7 @@ Reference:
 
 Spark shape: the reference fans out one thread-pool task per sink/declaration
 (``ConcurrentTaskUtil``); here the same fan-out is the DataFrame itself —
-the ddg closure is a bounded iterative join on REACHING_DEF (depth rounds,
+the ddg closure is ``fixpoint.semi_naive`` over REACHING_DEF (depth rounds,
 all sinks advance together), and usage slices are three equi-joins + one
 grouped aggregation. Everything stays distributed; results are DataFrames a
 caller writes with ``df.write.json`` (one JSON slice row per part).
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.dims import budgeted_broadcast
+from .operators.fixpoint import semi_naive
 
 SLICE_DEPTH_DEFAULT = 20  # DataFlowConfig.sliceDepth default
 
@@ -41,20 +42,11 @@ def data_flow_slice(nodes: DataFrame, edges: DataFrame,
         F.col("dst").alias("node_id"), F.col("src").alias("prev_id")
     )
 
-    visited = args.localCheckpoint(eager=True)
-    frontier = visited
-    for _ in range(slice_depth):
-        nxt = (
-            frontier.join(rd_back, "node_id")
-            .select(F.col("prev_id").alias("node_id"))
-            .distinct()
-            .join(visited, "node_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    def step(frontier: DataFrame) -> DataFrame:
+        return frontier.join(rd_back, "node_id").select(
+            F.col("prev_id").alias("node_id")).distinct()
+
+    visited = semi_naive(args, step, ["node_id"], slice_depth)
 
     methods = nodes.filter(F.col("kind") == "METHOD").select(
         F.col("node_id").alias("method_id"), F.col("full_name").alias("parent_method")

@@ -86,3 +86,21 @@ def test_method_ref_is_call_argument(cpg, g):
     submit = nodes[(nodes["kind"] == "CALL") & (nodes["name"] == "submit")]
     e = g.doc_edges(F10, "ARGUMENT")
     assert len(e[(e["src"] == submit.index[0]) & (e["dst"] == ref_id)]) == 1
+
+
+def test_inheritance_closure_distributed_matches_driver(cpg, monkeypatch):
+    """The distributed closure (taken above SMALL_HIERARCHY_LIMIT
+    INHERITS_FROM rows) yields the same (sub, sup) set as the driver-side
+    walk the fixture corpus normally takes."""
+    from joern_spark.operators import callgraph
+
+    def pairs():
+        rows = callgraph.inheritance_closure(cpg.nodes, cpg.edges).collect()
+        return {(r["sub"], r["sup"]) for r in rows}
+
+    driver = pairs()
+    monkeypatch.setattr(callgraph, "SMALL_HIERARCHY_LIMIT", 0)
+    distributed = pairs()
+    assert distributed == driver
+    # the fixture has a non-reflexive edge, so the loop does real rounds
+    assert any(sub != sup for sub, sup in driver)
